@@ -173,7 +173,7 @@ Level choice: this VM's 32 vCPUs saturate near ~20 effective cores
 near-linear and the engine's own scaling is measurable.
 
 Method: corpus synthesized once and materialized to parquet before
-timing; the timed section is the salted mapInPandas extraction pipeline
+timing; the timed section is the salted mapInArrow extraction pipeline
 ending in a noop sink (no driver collect). Parallelism enters only via
 `local[k]`, shuffle partitions = 2k, and extraction task count = 8k
 (8 task waves per core slot — salt-bucket sizes vary, so fine tasks

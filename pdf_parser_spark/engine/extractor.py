@@ -1,11 +1,12 @@
 """Arrow-batched extraction UDF and the end-to-end pipeline.
 
-``extract_batch`` is the engine's single UDTF-style extractor
-(SURVEY.md §2.9): Arrow record batches of (url, html, host) in, parsed
-rows out. Payload dispatch sniffs ``%PDF-`` magic vs markup
-(SURVEY.md §2.10). One parse produces BOTH the extracted text and the
-span records (spans travel as an array<struct> column so the expensive
-kernel work happens exactly once; downstream views prune or explode).
+``extract_batch_arrow`` is the engine's one extractor, the body of a
+``mapInArrow`` stage (SURVEY.md §2.9): Arrow record batches of
+(url, html) in, parsed rows out. Batch and streaming ingest both run
+it. Payload dispatch sniffs ``%PDF-`` magic vs markup (SURVEY.md
+§2.10). One parse produces BOTH the extracted text and the span records
+(spans travel as an array<struct> column so the expensive kernel work
+happens exactly once; downstream views prune or explode).
 
 Per-partition lineage (north rule): every row carries the Spark
 partition id; the ``audit`` view aggregates docs/sec, byte volume and
@@ -17,31 +18,16 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Iterator
+from functools import partial
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..htmlcore.extract import extract_html
-from ..pdfcore.extract import extract_pdf
 from .partitioning import salted_repartition
-
-SPAN_STRUCT = (
-    "page_no INT, seq INT, text STRING, x DOUBLE, y DOUBLE, "
-    "font STRING, size DOUBLE, width DOUBLE"
-)
-ITEM_STRUCT = (
-    "seq INT, page_no INT, font STRING, text STRING, "
-    "encoded_hex STRING, instance_index INT"
-)
-PARSED_SCHEMA = (
-    "url STRING, kind STRING, text STRING, n_pages INT, n_items INT, "
-    f"n_spans INT, error STRING, parse_ms DOUBLE, payload_bytes BIGINT, "
-    f"partition_id INT, fallback_pages INT, recovered INT, "
-    f"spans ARRAY<STRUCT<{SPAN_STRUCT}>>, items ARRAY<STRUCT<{ITEM_STRUCT}>>"
-)
 
 
 def _sniff(payload: bytes) -> str:
@@ -73,124 +59,7 @@ def _resolve_max_payload(max_payload_bytes: int | None) -> int:
     )
 
 
-def _extract_one(
-    url: str,
-    payload,
-    emit_items: bool = True,
-    multibyte: bool = False,
-    max_bytes: int = DEFAULT_MAX_PAYLOAD_BYTES,
-) -> dict:
-    t0 = time.perf_counter()
-    if payload is None:
-        payload = b""
-    payload = bytes(payload)
-    kind = _sniff(payload)
-    if max_bytes and len(payload) > max_bytes:
-        return {
-            "url": url,
-            "kind": kind,
-            "text": "",
-            "n_pages": 0,
-            "n_items": 0,
-            "n_spans": 0,
-            "error": (
-                f"PayloadTooLarge: {len(payload)} bytes > cap {max_bytes}"
-            ),
-            "parse_ms": (time.perf_counter() - t0) * 1000.0,
-            "payload_bytes": len(payload),
-            "fallback_pages": 0,
-            "recovered": 0,
-            "spans": [],
-            "items": [],
-        }
-    text = ""
-    n_pages = n_items = n_spans = fallback_pages = recovered = 0
-    error = None
-    spans: list[dict] = []
-    items: list[dict] = []
-    if kind == "pdf":
-        r = extract_pdf(payload, multibyte_cmaps=multibyte)
-        text, n_pages, n_items, error = r.text, r.n_pages, r.n_items, r.error
-        fallback_pages = r.fallback_pages
-        recovered = int(r.recovered)
-        spans = [
-            {
-                "page_no": int(pg),
-                "seq": int(s.seq),
-                "text": s.text,
-                "x": float(s.x),
-                "y": float(s.y),
-                "font": s.font,
-                "size": float(s.size),
-                "width": float(s.width),
-            }
-            for s, pg in zip(r.spans, r.span_pages)
-        ]
-        n_spans = len(spans)
-        items = [] if not emit_items else [
-            {
-                "seq": int(i),
-                "page_no": int(pno),
-                "font": font,
-                "text": itext,
-                "encoded_hex": encoded.hex(),
-                "instance_index": int(idx),
-            }
-            for i, (pno, font, itext, encoded, idx) in enumerate(r.items)
-        ]
-    else:
-        try:
-            text = extract_html(payload.decode("utf-8", errors="replace"))
-            n_items = text.count("\n") + 1 if text else 0
-        except Exception as exc:  # html path must never kill a batch
-            error = f"{type(exc).__name__}: {exc}"
-    return {
-        "url": url,
-        "kind": kind,
-        "text": text,
-        "n_pages": n_pages,
-        "n_items": n_items,
-        "n_spans": n_spans,
-        "error": error,
-        "parse_ms": (time.perf_counter() - t0) * 1000.0,
-        "payload_bytes": len(payload),
-        "fallback_pages": fallback_pages,
-        "recovered": recovered,
-        "spans": spans,
-        "items": items,
-    }
-
-
-def extract_batch(
-    batches: Iterator[pd.DataFrame],
-    emit_items: bool = True,
-    multibyte: bool = False,
-    max_payload_bytes: int | None = None,
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (url, html[, ...]) batches → PARSED_SCHEMA batches."""
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-    max_bytes = _resolve_max_payload(max_payload_bytes)
-    for pdf in batches:
-        rows = [
-            _extract_one(u, p, emit_items, multibyte, max_bytes)
-            for u, p in zip(pdf["url"], pdf["html"])
-        ]
-        out = pd.DataFrame(
-            rows,
-            columns=[
-                "url", "kind", "text", "n_pages", "n_items", "n_spans",
-                "error", "parse_ms", "payload_bytes", "fallback_pages",
-                "recovered", "spans", "items",
-            ],
-        )
-        out.insert(9, "partition_id", pid)
-        yield out
-
-
-def _arrow_schema():
-    import pyarrow as pa
-
+def _arrow_schema() -> pa.Schema:
     span = pa.struct(
         [
             ("page_no", pa.int32()),
@@ -233,20 +102,25 @@ def _arrow_schema():
     )
 
 
+# The Spark-side twin of the Arrow schema, derived so the two can't drift.
+PARSED_SCHEMA = from_arrow_schema(_arrow_schema())
+
+
 def extract_batch_arrow(
-    batches,
+    batches: Iterator[pa.RecordBatch],
     emit_items: bool = True,
     multibyte: bool = False,
     max_payload_bytes: int | None = None,
-) -> "Iterator":
-    """mapInArrow body: columnar twin of extract_batch.
+) -> Iterator[pa.RecordBatch]:
+    """mapInArrow body: (url, html) batches → ``PARSED_SCHEMA`` batches.
 
     Builds the output RecordBatch column-by-column (flat span arrays +
-    offsets) instead of per-row dicts through pandas — skips one full
-    row→columnar conversion per batch on the hot path.
+    offsets) instead of per-row dicts, so no row→columnar conversion
+    sits on the hot path. The kernels are looked up when the generator
+    starts, not bound at module import, so a wrapper installed on
+    ``pdfcore.extract.extract_pdf`` / ``htmlcore.extract.extract_html``
+    sees every call.
     """
-    import pyarrow as pa
-
     from ..htmlcore.extract import extract_html as _xhtml
     from ..pdfcore.extract import extract_pdf as _xpdf
 
@@ -304,7 +178,7 @@ def extract_batch_arrow(
                 try:
                     text = _xhtml(raw.decode("utf-8", errors="replace"))
                     n_items = text.count("\n") + 1 if text else 0
-                except Exception as exc:
+                except Exception as exc:  # html path must never kill a batch
                     error = f"{type(exc).__name__}: {exc}"
             offsets.append(len(s_seq))
             i_offsets.append(len(i_seq))
@@ -318,55 +192,39 @@ def extract_batch_arrow(
             bytes_c.append(len(raw))
             fb_c.append(fallback_pages)
             rec_c.append(recovered)
-        span_struct = pa.StructArray.from_arrays(
-            [
-                pa.array(s_page, pa.int32()),
-                pa.array(s_seq, pa.int32()),
-                pa.array(s_text, pa.string()),
-                pa.array(s_x, pa.float64()),
-                pa.array(s_y, pa.float64()),
-                pa.array(s_font, pa.string()),
-                pa.array(s_size, pa.float64()),
-                pa.array(s_width, pa.float64()),
-            ],
-            names=["page_no", "seq", "text", "x", "y", "font", "size", "width"],
-        )
-        spans_col = pa.ListArray.from_arrays(
-            pa.array(offsets, pa.int32()), span_struct
-        )
-        item_struct = pa.StructArray.from_arrays(
-            [
-                pa.array(i_seq, pa.int32()),
-                pa.array(i_page, pa.int32()),
-                pa.array(i_font, pa.string()),
-                pa.array(i_text, pa.string()),
-                pa.array(i_hex, pa.string()),
-                pa.array(i_idx, pa.int32()),
-            ],
-            names=["seq", "page_no", "font", "text", "encoded_hex", "instance_index"],
-        )
-        items_col = pa.ListArray.from_arrays(
-            pa.array(i_offsets, pa.int32()), item_struct
-        )
+        columns = [
+            urls, kind_c, text_c, npages_c, nitems_c, nspans_c, err_c,
+            ms_c, bytes_c, [pid] * n, fb_c, rec_c,
+        ]
         yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(urls, pa.string()),
-                pa.array(kind_c, pa.string()),
-                pa.array(text_c, pa.string()),
-                pa.array(npages_c, pa.int32()),
-                pa.array(nitems_c, pa.int32()),
-                pa.array(nspans_c, pa.int32()),
-                pa.array(err_c, pa.string()),
-                pa.array(ms_c, pa.float64()),
-                pa.array(bytes_c, pa.int64()),
-                pa.array([pid] * n, pa.int32()),
-                pa.array(fb_c, pa.int32()),
-                pa.array(rec_c, pa.int32()),
-                spans_col,
-                items_col,
+            [pa.array(c, f.type) for c, f in zip(columns, schema)]
+            + [
+                _list_column(
+                    schema.field("spans").type,
+                    offsets,
+                    [s_page, s_seq, s_text, s_x, s_y, s_font, s_size, s_width],
+                ),
+                _list_column(
+                    schema.field("items").type,
+                    i_offsets,
+                    [i_seq, i_page, i_font, i_text, i_hex, i_idx],
+                ),
             ],
             schema=schema,
         )
+
+
+def _list_column(list_type: pa.ListType, offsets: list, fields: list) -> pa.Array:
+    """A list<struct> column from one flat list per struct field (in the
+    schema's field order) plus the per-row list offsets."""
+    struct_type = list_type.value_type
+    values = pa.StructArray.from_arrays(
+        [pa.array(v, f.type) for v, f in zip(fields, struct_type)],
+        fields=list(struct_type),
+    )
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, pa.int32()), values, type=list_type
+    )
 
 
 def parse_webdocs(
@@ -386,7 +244,7 @@ def parse_webdocs(
     The salt-map pre-pass is a groupBy(host).count() — cheap (pruned
     column scan) when webdocs is a real table, but it re-executes the
     whole upstream plan when webdocs is itself UDF-generated (column
-    pruning cannot reach through mapInPandas). In that case pass
+    pruning cannot reach through a Python UDF stage). In that case pass
     ``salt_map`` computed from a cheap side-channel (e.g. the source
     table's host column) to keep the pipeline single-pass.
 
@@ -432,38 +290,21 @@ def parse_webdocs(
         slim = salted_repartition(slim, num_partitions, salt_map=salt_map)
     else:
         slim = slim.repartition(num_partitions, F.col("url"))
-    # Columnar Arrow path by default (no pandas row materialization);
-    # the pandas twin (extract_batch) remains the reference
-    # implementation and fallback. Decoded-item structs (font / encoded
-    # hex / instance index per text op) cost ~20% extra serialization,
-    # so they are opt-in (emit_items) — the items column is always in
-    # the schema, empty when disabled.
-    from functools import partial
-
-    # resolve the payload cap ON THE DRIVER so the env-var override
+    # Decoded-item structs (font / encoded hex / instance index per text
+    # op) cost ~20% extra serialization, so they are opt-in (emit_items)
+    # — the items column is always in the schema, empty when disabled.
+    # The payload cap is resolved ON THE DRIVER so the env-var override
     # rides the closure to every executor (workers don't inherit the
-    # driver's environment on a real cluster)
-    max_bytes = _resolve_max_payload(max_payload_bytes)
-    try:
-        return slim.mapInArrow(
-            partial(
-                extract_batch_arrow,
-                emit_items=emit_items,
-                multibyte=multibyte,
-                max_payload_bytes=max_bytes,
-            ),
-            schema=PARSED_SCHEMA,
-        )
-    except AttributeError:  # very old Spark: no mapInArrow
-        return slim.mapInPandas(
-            partial(
-                extract_batch,
-                emit_items=emit_items,
-                multibyte=multibyte,
-                max_payload_bytes=max_bytes,
-            ),
-            schema=PARSED_SCHEMA,
-        )
+    # driver's environment on a real cluster).
+    return slim.mapInArrow(
+        partial(
+            extract_batch_arrow,
+            emit_items=emit_items,
+            multibyte=multibyte,
+            max_payload_bytes=_resolve_max_payload(max_payload_bytes),
+        ),
+        schema=PARSED_SCHEMA,
+    )
 
 
 def extracted_view(parsed: DataFrame) -> DataFrame:

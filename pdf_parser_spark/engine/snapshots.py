@@ -1,9 +1,9 @@
 """Iceberg-analog snapshot log: atomic manifest commits over parquet.
 
 North rule: "resumes from the last committed snapshot" with
-"per-partition lineage + metrics". :mod:`resume` evidences the row-level
-form (anti-join on committed urls — an O(committed-rows) data scan).
-This module is the metadata-only form, the shape Iceberg actually has:
+"per-partition lineage + metrics". This module is the engine's one
+resume form: committed work is a metadata read, never a scan of the
+committed rows — the shape Iceberg actually has:
 
 Layout under ``<output_dir>``::
 
@@ -811,10 +811,9 @@ def snapshot_resumable_extract(
 ) -> DataFrame:
     """Extraction with one snapshot commit per url-hash bucket.
 
-    Unlike :func:`resume.batched_resumable_extract` (anti-join on the
-    committed url column — an O(committed-rows) scan per re-run), resume
-    here is a pure metadata read: the snapshot log names the committed
-    buckets, the loop runs only the rest. Each bucket writes its own
+    Resume is a pure metadata read, not an O(committed-rows) scan of
+    the committed urls: the snapshot log names the committed buckets,
+    the loop runs only the rest. Each bucket writes its own
     ``data/bucket=<b>`` directory with mode=overwrite, so re-running a
     bucket that crashed mid-write simply replaces the debris before the
     manifest that makes it visible ever exists — exactly once per url
@@ -825,8 +824,8 @@ def snapshot_resumable_extract(
     extract bucket look committed just because an epoch shares its id.
 
     Requires the same input across runs (bucket membership is
-    xxhash64(url) % n_batches, deterministic); for changed inputs use
-    the row-level anti-join path.
+    xxhash64(url) % n_batches, deterministic): a bucket committed from
+    a smaller input is not re-run to pick up urls added later.
     """
     log = SnapshotLog(output_dir)
     done = log.committed_buckets(kind="extract")

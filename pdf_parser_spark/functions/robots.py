@@ -34,6 +34,7 @@ urlnorm/host_blocklist/host_cap.)
 
 from __future__ import annotations
 
+import math
 import re
 
 from pyspark.sql import DataFrame
@@ -120,7 +121,7 @@ def parse_crawl_delay(text: str, agent: str) -> float | None:
             delay = float(val)
         except ValueError:
             continue
-        if delay < 0:
+        if not math.isfinite(delay) or delay < 0:
             continue
         if agent in cur_agents:
             exact.append(delay)

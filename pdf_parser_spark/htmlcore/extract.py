@@ -245,10 +245,6 @@ _LANG_RE = re.compile(r"""\blang\s*=\s*["']?([A-Za-z0-9-]+)""", re.I)
 _CHARSET_RE = re.compile(r"""charset\s*=\s*["']?([A-Za-z0-9_-]+)""", re.I)
 
 
-def _find_ci(haystack: str, needle: str, start: int = 0) -> int:
-    return haystack.lower().find(needle, start)
-
-
 def html_metadata(html_text: str) -> dict:
     """Head metadata + link inventory of a page:
 
@@ -289,11 +285,13 @@ def html_metadata(html_text: str) -> dict:
         m = _LANG_RE.search(tag)
         if m:
             lang = m.group(1)
-    # charset: first <meta ...charset=...> tag
+    # charset: first <meta ...charset=...> tag, each tag read to at
+    # most 512 chars — an unbounded find(">") per "<meta" is quadratic
+    # on "<meta " * N with one distant ">"
     charset = None
     i = low.find("<meta")
     while i != -1:
-        gt = html_text.find(">", i)
+        gt = html_text.find(">", i, i + 512)
         tag = html_text[i : gt if gt != -1 else i + 512]
         m = _CHARSET_RE.search(tag)
         if m:

@@ -184,7 +184,7 @@ PDF_TEXT_SQL = f"array_to_string({PDF_LINES_SQL}, chr(10))"
     f"SELECT {URL_SQL} AS url, {EXPECTED_SQL_EXPR} AS text FROM documents",
 )
 def flagship_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end: synthesize webdocs → salted mapInPandas extraction →
+    """End-to-end: synthesize webdocs → salted mapInArrow extraction →
     (url, text). The oracle recomputes the expected byte-exact text in
     SQL — this entry IS the byte-identical-extraction gate."""
     webdocs = synthesize_webdocs(spark, sf_dir)

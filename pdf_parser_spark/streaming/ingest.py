@@ -1,6 +1,6 @@
 """Incremental ingestion via Structured Streaming.
 
-The batch engine's resume path (engine/resume.py) is the primary
+The batch engine's snapshot log (engine/snapshots.py) is the primary
 incremental mechanism (SURVEY.md §2.9: the reference is a one-shot
 batch tool). This module adds the continuous variant for
 always-arriving corpora: a file-source stream over the webdocs table
@@ -10,8 +10,9 @@ directory (e.g. by a WARC unpacker) are discovered, parsed once, and
 appended; a restart resumes from the checkpoint.
 
 Design notes (scale):
-- the extraction UDF is IDENTICAL to the batch path — one kernel, two
-  drivers (batch + streaming), no semantic drift;
+- the extraction UDF is IDENTICAL to the batch path: both run
+  ``extract_batch_arrow`` under ``mapInArrow``, so there is one
+  extractor and no semantic drift;
 - ``maxFilesPerTrigger`` bounds micro-batch size so one giant drop
   cannot OOM an executor wave;
 - no shuffle inside the stream: salting matters for long-running batch
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..engine.corpus import WEBDOCS_SCHEMA
-from ..engine.extractor import PARSED_SCHEMA, extract_batch
+from ..engine.extractor import PARSED_SCHEMA, extract_batch_arrow
 
 
 def streaming_extract(
@@ -46,8 +47,8 @@ def streaming_extract(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(source_dir)
     )
-    parsed = stream.select("url", "html").mapInPandas(
-        extract_batch, schema=PARSED_SCHEMA
+    parsed = stream.select("url", "html").mapInArrow(
+        extract_batch_arrow, schema=PARSED_SCHEMA
     )
     writer = (
         parsed.writeStream.format("parquet")
@@ -140,8 +141,8 @@ def streaming_extract_to_snapshots(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(source_dir)
     )
-    parsed = stream.select("url", "html").mapInPandas(
-        extract_batch, schema=PARSED_SCHEMA
+    parsed = stream.select("url", "html").mapInArrow(
+        extract_batch_arrow, schema=PARSED_SCHEMA
     )
     writer = parsed.writeStream.foreachBatch(commit_epoch).option(
         "checkpointLocation", checkpoint_dir

@@ -362,20 +362,44 @@ def test_regex_backtracking_bounded():
     assert r.text == "bounded"
 
 
-def test_flate_bomb_rejected_without_materializing():
+def test_flate_bomb_rejected_without_materializing(monkeypatch):
     """A ~2 MB flate stream declaring 2 GiB of zeros must raise
     ValueError via the output cap (decompressobj max_length), not
     inflate: one hostile stream per core would OOM a 32-task stage."""
     import time
+    import types
     import zlib
 
     import pytest
 
+    from pdf_parser_spark.pdfcore import filters
     from pdf_parser_spark.pdfcore.filters import (
         MAX_DECODED_STREAM_BYTES,
         flate_decode,
         lzw_decode,
         runlength_decode,
+    )
+
+    class CountingInflater:
+        """decompressobj that adds up the bytes every call inflates."""
+
+        def __init__(self):
+            self._d = zlib.decompressobj()
+            self.max_lengths: list[int] = []
+            self.inflated = 0
+            inflaters.append(self)
+
+        def decompress(self, data, max_length=0):
+            self.max_lengths.append(max_length)
+            out = self._d.decompress(data, max_length)
+            self.inflated += len(out)
+            return out
+
+    inflaters: list[CountingInflater] = []
+    monkeypatch.setattr(
+        filters,
+        "zlib",
+        types.SimpleNamespace(decompressobj=CountingInflater, error=zlib.error),
     )
 
     comp = zlib.compressobj(9)
@@ -385,14 +409,18 @@ def test_flate_bomb_rejected_without_materializing():
     t0 = time.perf_counter()
     with pytest.raises(ValueError, match="exceeds"):
         flate_decode(bomb)
+    # the cap is what stopped it: one capped call, which filled the cap
+    # (the one byte past it is how the overflow is seen) and inflated
+    # nothing more — never the 2 GiB the stream declares
+    (inflater,) = inflaters
+    assert inflater.max_lengths == [MAX_DECODED_STREAM_BYTES + 1]
+    assert inflater.inflated == MAX_DECODED_STREAM_BYTES + 1
     with pytest.raises(ValueError, match="exceeds"):
         runlength_decode(b"\x81\x00" * (3 * 1024 * 1024))
-    # Bound is generous on purpose: the guard itself is O(cap), but
-    # faulting the 256 MiB capped buffer varies 0.7-13s on this
-    # container (raw zlib.decompressobj().decompress(data, cap+1) of
-    # the identical bytes measured at both extremes back-to-back).
-    # Pre-fix behavior — materializing the full 2 GiB — takes minutes
-    # and still trips this.
+    # Backstop only, the assertions above are the deterministic check:
+    # the guard is O(cap), but faulting the 256 MiB capped buffer varies
+    # 0.7-13s on a shared 4-vCPU VM. Materializing the full 2 GiB takes
+    # minutes.
     assert time.perf_counter() - t0 < 60.0
     # tolerance behaviors preserved: trailing garbage and missing adler
     data = b"hello world " * 1000

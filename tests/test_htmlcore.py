@@ -172,3 +172,35 @@ def test_html_metadata_fields_and_hostile_inputs():
     weird = "<html LANG='fr'><head><meta CHARSET='UTF-8'><title> a \t b </title></head>"
     m2 = html_metadata(weird)
     assert m2["title"] == "a b" and m2["lang"] == "fr" and m2["charset"] == "utf-8"
+
+
+class _ScanCountingStr(str):
+    """A str that adds up the window length of every ``find`` call on it."""
+
+    scanned = 0
+
+    def find(self, sub, start=0, end=None):
+        end = len(self) if end is None else min(end, len(self))
+        type(self).scanned += max(end - start, 0)
+        return str.find(self, sub, start, end)
+
+
+def test_html_metadata_meta_run_is_linear():
+    # "<meta " * N with no ">" or one ">" at the very end: every <meta
+    # used to search to the end of the page for its ">", and with the
+    # distant ">" also slice and regex-scan the rest of the page —
+    # quadratic, over ten minutes at this N. Each tag is now read to at
+    # most 512 chars, so the chars searched stay linear in the page
+    # (the quadratic form searches ~10^11 here, the bound is ~10^8).
+    from pdf_parser_spark.htmlcore.extract import html_metadata
+
+    n = 200_000
+    for tail, charset in (
+        ("", None),
+        (">", None),
+        ('><meta charset="Latin1">', "latin1"),  # a real tag after the run
+    ):
+        page = "<meta " * n + tail
+        _ScanCountingStr.scanned = 0
+        assert html_metadata(_ScanCountingStr(page))["charset"] == charset
+        assert _ScanCountingStr.scanned <= 512 * (n + 1) + 2 * len(page)

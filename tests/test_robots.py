@@ -2,6 +2,8 @@
 (functions/robots.py): group selection, wildcard/anchor rules, tie
 semantics, and the relational Spark path."""
 
+import math
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -139,6 +141,16 @@ def test_crawl_delay_group_selection_and_max_merge():
         )
         is None
     )
+    # so are non-finite ones: float() parses them, but an infinite
+    # delay would win the max-merge and a NaN one poisons the schedule
+    for bad in ("nan", "inf", "-inf", "NaN", "Infinity"):
+        assert parse_crawl_delay(f"User-agent: *\nCrawl-delay: {bad}\n", "x") is None
+        assert (
+            parse_crawl_delay(
+                f"User-agent: *\nCrawl-delay: {bad}\nCrawl-delay: 2\n", "x"
+            )
+            == 2.0
+        )
 
 
 def test_parse_sitemaps_global_and_first_wins():
@@ -158,8 +170,13 @@ def test_crawl_schedule_relational(spark):
         robots_meta_df,
     )
 
+    hostile = "User-agent: *\nCrawl-delay: nan\nCrawl-delay: inf\nCrawl-delay: -inf\n"
     robots = spark.createDataFrame(
-        [("slow.com", POLITE), ("empty.com", "User-agent: *\n")],
+        [
+            ("slow.com", POLITE),
+            ("empty.com", "User-agent: *\n"),
+            ("hostile.com", hostile),
+        ],
         "host STRING, robots_txt STRING",
     )
     meta = robots_meta_df(robots, agent="trainbot")
@@ -170,15 +187,19 @@ def test_crawl_schedule_relational(spark):
         "https://h/sitemap-news.xml",
     ]
     assert m["empty.com"]["crawl_delay"] is None
+    assert m["hostile.com"]["crawl_delay"] is None  # non-finite ignored
 
     urls = spark.createDataFrame(
         [(f"https://{h}/p{i}", h) for h in
-         ("slow.com", "empty.com", "norobots.com") for i in range(3)],
+         ("slow.com", "empty.com", "norobots.com", "hostile.com")
+         for i in range(3)],
         "url STRING, host STRING",
     )
     out = crawl_schedule(urls, meta, default_delay=2.0)
     rows = {(r["host"], r["slot"]): r["fetch_at_s"] for r in out.collect()}
-    assert len(rows) == 9  # no url lost, even the metadata-less host
+    assert len(rows) == 12  # no url lost, even the metadata-less host
+    assert all(math.isfinite(v) for v in rows.values())
+    assert rows[("hostile.com", 2)] == 4.0    # 2 * default
     # parsed delay honored per host; default for unknown/absent
     assert rows[("slow.com", 2)] == 6.0       # 2 * 3.0
     assert rows[("empty.com", 1)] == 2.0      # 1 * default

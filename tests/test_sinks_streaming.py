@@ -70,8 +70,16 @@ def test_streaming_extract_drains_and_resumes(spark, webdocs, tmp_path):
     view = extracted_stream_view(spark, out)
     assert view.count() == first.count() + second.count()
     assert view.select("url").distinct().count() == view.count()
-    # extraction semantics identical to batch
+    # extraction semantics identical to batch: same extractor, so
+    # the streamed rows equal a batch parse of the same urls, items too
     assert view.where(F.col("text") == "").count() == 0
+    cols = ["url", "text", "n_items", "n_spans", "spans", "items"]
+    streamed = spark.read.parquet(out).select(*cols).collect()
+    batch = parse_webdocs(
+        webdocs.where(F.col("doc_id") < 150), emit_items=True
+    ).select(*cols).collect()
+    assert sorted(streamed) == sorted(batch)
+    assert any(r.items for r in streamed)  # PDFs stream their items
 
 
 def _mini_webdocs(spark, rows):
